@@ -169,6 +169,26 @@ def _nested_col(df: DataFrame, name: str):
     return F.col(name)
 
 
+def _key_schema(schema, keys: Sequence[str]):
+    """Schema of the flat tombstone key columns (dots replaced by ``__``)
+    of ``keys``, typed from a version's recorded schema and resolved the
+    way :func:`_nested_col` resolves them: a literal column name first,
+    otherwise a struct-field path. Reading tombstones with it spares the
+    per-directory schema-inference job."""
+    from pyspark.sql import types as T
+
+    fields = []
+    for k in keys:
+        if k in schema.fieldNames():
+            dt = schema[k].dataType
+        else:
+            dt = schema
+            for part in k.split("."):
+                dt = dt[part].dataType
+        fields.append(T.StructField(k.replace(".", "__"), dt))
+    return T.StructType(fields)
+
+
 def split_name(name: str) -> tuple[str, str, str]:
     """'ns.proj.name' | 'proj.name' | 'name' -> (ns, proj, name)."""
     parts = name.split(".")
@@ -364,91 +384,6 @@ class Metastore:
         self._write_record(rec)
         return dv
 
-    def append_dataset_version(
-        self,
-        df_new: DataFrame,
-        name: str,
-        base: DatasetVersion,
-        attrs: Optional[dict[str, Any]] = None,
-        dependencies: Optional[list[dict[str, str]]] = None,
-        job_hash: str = "",
-    ) -> DatasetVersion:
-        """Record a new version whose rows are ``base``'s rows plus
-        ``df_new`` — WITHOUT rewriting the base (the delta append fast
-        path): only the new rows are written; the manifest's
-        ``extends_version`` attr makes readers union the base version's
-        files in. At 100 TB this turns a pure-append incremental save
-        from a full corpus rewrite into an O(churn) write; fragmentation
-        accounting spans the whole chain, so ``compact_dataset`` (or
-        ``delta_save(compact_target_bytes=)``) heals long chains into a
-        self-contained copy.
-
-        Callers own the soundness contract: ``df_new``'s keys must be
-        disjoint from the base's (no displaced rows, nothing deleted)
-        and its schema must match the base's column-for-column —
-        ``delta_save`` proves both from its diff before calling. Base
-        must be the record's latest version and not bucketed."""
-        ns, proj, base_name = split_name(name)
-        rec = self._read_record(ns, proj, base_name)
-        if rec is None:
-            raise DatasetNotFoundError(f"dataset not found: {name}")
-        head = rec.latest_version()
-        if head is None or head.version != base.version:
-            raise ValueError(
-                f"append_dataset_version: base {base.version} is not the "
-                f"latest version of {name}"
-            )
-        if base.bucket:
-            raise ValueError(
-                "append_dataset_version: bucketed versions have a global "
-                "layout — use a full save"
-            )
-        version = bump_version(base.version, "patch")
-        full = f"{ns}.{proj}.{base_name}"
-        data_path = self.version_data_path(full, version)
-        # churn count rides the write job (CollectMetrics) — no
-        # post-write footer count job
-        obs = Observation()
-        df_new.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).option("compression", self.PARQUET_CODEC).parquet(data_path)
-        n_new = int(obs.get["rows"])
-        # the base's preview stays valid: chain reads are base-first, so
-        # these are still the head's first rows — re-collecting would
-        # re-open the base data this fast path exists to avoid. A base
-        # SHORTER than the preview window tops up from the churn dir only
-        # (still O(churn)), so the head's preview shows appended rows too.
-        preview = json.loads(json.dumps(base.preview, default=str))
-        preview_rows = 20
-        if len(preview) < preview_rows and base.num_rows < preview_rows:
-            from pyspark.sql import types as T
-
-            st = T.StructType.fromJson(json.loads(base.schema_json))
-            spark = df_new.sparkSession
-            extra = (
-                spark.read.schema(st).parquet(data_path)
-                .limit(preview_rows - len(preview)).collect()
-            )
-            preview = preview + json.loads(json.dumps(
-                [r.asDict(recursive=True) for r in extra], default=str
-            ))
-        dv = DatasetVersion(
-            version=version,
-            uuid=uuid.uuid4().hex,
-            created_at=time.time(),
-            num_rows=base.num_rows + n_new,
-            schema_json=base.schema_json,
-            attrs={**(attrs or {}), "extends_version": base.version},
-            dependencies=dependencies or [],
-            preview=preview,
-            job_hash=job_hash,
-            signal_schema=json.loads(json.dumps(base.signal_schema))
-            if base.signal_schema else {},
-        )
-        rec.versions.append(dv)
-        self._write_record(rec)
-        return dv
-
     def version_tombstone_path(self, name: str, version: str) -> str:
         ns, proj, base = split_name(name)
         return os.path.join(
@@ -461,32 +396,41 @@ class Metastore:
         df_new: DataFrame,
         name: str,
         base: DatasetVersion,
-        tombstone_keys: DataFrame,
-        tombstone_on: list[str],
+        tombstone_keys: Optional[DataFrame] = None,
+        tombstone_on: Sequence[str] = (),
         attrs: Optional[dict[str, Any]] = None,
         dependencies: Optional[list[dict[str, str]]] = None,
         job_hash: str = "",
         preview_rows: int = 20,
-    ) -> DatasetVersion:
+    ) -> tuple[DatasetVersion, int]:
         """Record a new version whose rows are ``base``'s rows MINUS the
-        keys in ``tombstone_keys`` plus ``df_new`` — without rewriting the
-        base (the delete-vector extension of the append fast path): only
-        the churn rows and a churn-sized key set are written; readers
-        resolve visibility through the manifest chain (a row is visible
-        unless a LATER chain link tombstones its key). At 100 TB this
-        turns a modified/deleted-heavy incremental save from a full
-        corpus rewrite into an O(churn) write plus one narrow key-column
-        scan for the row count.
+        keys in ``tombstone_keys`` (if any) plus ``df_new`` — WITHOUT
+        rewriting the base (the delta by-reference write): only the churn
+        rows are written, and the manifest's ``extends_version`` attr
+        makes readers union the base version's files in. At 100 TB this
+        turns an incremental save from a full corpus rewrite into an
+        O(churn) write; fragmentation accounting spans the whole chain, so
+        ``compact_dataset`` (or ``delta_save(compact_target_bytes=)``)
+        heals long chains into a self-contained copy.
 
         ``tombstone_keys`` carries one flattened column per entry of
         ``tombstone_on`` (dots replaced by ``__`` — the delta flat-key
-        convention); comparison is null-safe, matching DataChain.subtract
-        on the rewrite path this replaces. Callers own the soundness
-        contract (delta_save proves it from its diff): every df_new key
-        is in tombstone_keys or absent from the base, and df_new's schema
-        matches the base's column-for-column. Base must be the record's
-        latest version and not bucketed; ``compact_dataset`` heals the
-        chain into a self-contained copy."""
+        convention). It is written as a churn-sized key set beside the
+        churn rows and named in the ``tombstone_on`` attr; readers keep a
+        row visible unless a LATER chain link tombstones its key
+        (null-safe, matching DataChain.subtract on the rewrite path).
+        The displaced-row count then costs one key-column scan of the
+        base. Without tombstones nothing is displaced: no tombstone dir,
+        no count, and the base's preview stays the head's.
+
+        Callers own the soundness contract (delta_save proves it from its
+        diff): every df_new key is tombstoned or absent from the base, and
+        df_new's schema matches the base's column-for-column. Base must be
+        the record's latest version and not bucketed.
+
+        Returns the new version and the number of base rows it displaced."""
+        from pyspark.sql import types as T
+
         ns, proj, base_name = split_name(name)
         rec = self._read_record(ns, proj, base_name)
         if rec is None:
@@ -505,61 +449,77 @@ class Metastore:
         version = bump_version(base.version, "patch")
         full = f"{ns}.{proj}.{base_name}"
         data_path = self.version_data_path(full, version)
-        tomb_path = self.version_tombstone_path(full, version)
-        flat_keys = [k.replace(".", "__") for k in tombstone_on]
+        st = T.StructType.fromJson(json.loads(base.schema_json))
+        # churn count rides the write job (CollectMetrics) — no
+        # post-write footer count job
         obs = Observation()
         df_new.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).option("compression", self.PARQUET_CODEC).parquet(data_path)
-        n_new = int(obs.get["rows"])
-        tombstone_keys.select(*flat_keys).dropDuplicates().write.mode(
-            "overwrite"
-        ).option("compression", self.PARQUET_CODEC).parquet(tomb_path)
-        # displaced-row count: base-VISIBLE rows whose key is tombstoned —
-        # a key-column-only scan of the chain against the broadcast churn
-        # keys (process() may emit any number of rows per key, so the
-        # source-side churn counts cannot stand in for it)
-        base_df, _, _ = self.load_dataset(spark, name, base.version)
-        tomb_df = spark.read.parquet(tomb_path).select(
-            *[F.col(fk).alias(f"__dcs_tk{j}")
-              for j, fk in enumerate(flat_keys)]
-        )
-        cond = None
-        for j, k in enumerate(tombstone_on):
-            c = _nested_col(base_df, k).eqNullSafe(F.col(f"__dcs_tk{j}"))
-            cond = c if cond is None else cond & c
-        n_displaced = base_df.join(
-            F.broadcast(tomb_df), cond, "left_semi"
-        ).count()
         dv = DatasetVersion(
             version=version,
             uuid=uuid.uuid4().hex,
             created_at=time.time(),
-            num_rows=base.num_rows - n_displaced + n_new,
+            num_rows=base.num_rows + int(obs.get["rows"]),
             schema_json=base.schema_json,
-            attrs={
-                **(attrs or {}),
-                "extends_version": base.version,
-                "tombstone_on": json.dumps(list(tombstone_on)),
-            },
+            attrs={**(attrs or {}), "extends_version": base.version},
             dependencies=dependencies or [],
             job_hash=job_hash,
             signal_schema=json.loads(json.dumps(base.signal_schema))
             if base.signal_schema else {},
         )
+        n_displaced = 0
+        if tombstone_keys is None:
+            # the base's preview stays valid: chain reads are base-first,
+            # so these are still the head's first rows — re-collecting
+            # would re-open the base data this write exists to avoid. A
+            # base SHORTER than the preview window tops up from the churn
+            # dir only (still O(churn)).
+            preview = list(base.preview)
+            if len(preview) < preview_rows and base.num_rows < preview_rows:
+                preview += [
+                    r.asDict(recursive=True)
+                    for r in spark.read.schema(st).parquet(data_path)
+                    .limit(preview_rows - len(preview)).collect()
+                ]
+        else:
+            tomb_path = self.version_tombstone_path(full, version)
+            tomb_st = _key_schema(st, tombstone_on)
+            tombstone_keys.select(
+                *[F.col(f.name).cast(f.dataType) for f in tomb_st.fields]
+            ).dropDuplicates().write.mode("overwrite").option(
+                "compression", self.PARQUET_CODEC
+            ).parquet(tomb_path)
+            # displaced-row count: base-VISIBLE rows whose key is
+            # tombstoned — a key-column-only scan of the chain against the
+            # broadcast churn keys (process() may emit any number of rows
+            # per key, so the source-side churn counts cannot stand in)
+            base_df, _, _ = self.load_dataset(spark, name, base.version)
+            tomb_df = spark.read.schema(tomb_st).parquet(tomb_path).select(
+                *[F.col(f).alias(f"__dcs_tk{j}")
+                  for j, f in enumerate(tomb_st.fieldNames())]
+            )
+            cond = None
+            for j, k in enumerate(tombstone_on):
+                c = _nested_col(base_df, k).eqNullSafe(F.col(f"__dcs_tk{j}"))
+                cond = c if cond is None else cond & c
+            n_displaced = base_df.join(
+                F.broadcast(tomb_df), cond, "left_semi"
+            ).count()
+            dv.num_rows -= n_displaced
+            dv.attrs["tombstone_on"] = json.dumps(list(tombstone_on))
+            # the base's preview may show rows this version tombstones —
+            # collect from the assembled head (limit-bounded, churn-sized
+            # broadcast; nothing near a corpus scan)
+            preview = [
+                r.asDict(recursive=True)
+                for r in self._load_chain(spark, full, rec, dv)
+                .limit(preview_rows).collect()
+            ]
+        dv.preview = json.loads(json.dumps(preview, default=str))
         rec.versions.append(dv)
         self._write_record(rec)
-        # the base's preview may show rows this version tombstones —
-        # recollect from the assembled head (limit-bounded, churn-sized
-        # broadcast; nothing near a corpus scan)
-        head_df, _, _ = self.load_dataset(spark, name, version)
-        dv.preview = json.loads(json.dumps(
-            [r.asDict(recursive=True)
-             for r in head_df.limit(preview_rows).collect()],
-            default=str,
-        ))
-        self._write_record(rec)
-        return dv
+        return dv, n_displaced
 
     @staticmethod
     def _check_schema_policy(
@@ -746,8 +706,13 @@ class Metastore:
         dataset pipeline)."""
         from functools import reduce
 
+        from pyspark.sql import types as T
+
         keys = tombs[0][1]
-        flat = [k.replace(".", "__") for k in keys]
+        tomb_st = _key_schema(
+            T.StructType.fromJson(json.loads(links[-1].schema_json)), keys
+        )
+        flat = tomb_st.fieldNames()
         tparts = []
         for i, t_on in tombs:
             if t_on != keys:
@@ -757,9 +722,9 @@ class Metastore:
                     "one delta key set; compact before changing keys"
                 )
             tparts.append(
-                spark.read.parquet(
+                spark.read.schema(tomb_st).parquet(
                     self.version_tombstone_path(full, links[i].version)
-                ).select(*flat).withColumn("__dcs_tlink", F.lit(i))
+                ).withColumn("__dcs_tlink", F.lit(i))
             )
         union = reduce(DataFrame.unionByName, tparts)
         tomb = union.groupBy(*flat).agg(F.max("__dcs_tlink").alias("__dcs_tmax"))

@@ -1708,29 +1708,38 @@ class DataChain:
 
     def _project_udf_params(self, param_names: Sequence[str]):
         """The narrowest frame that still answers ``param_names``: plain
-        params keep their column; a dotted param whose terminal field is a
-        plain (non-struct/map) value selects JUST that nested field, aliased
-        to the literal dotted name _extract_param matches first — the rest
-        of the struct stays out of the Python boundary. Dotted params with
-        struct terminals keep their whole root (hydration consumes the dict
-        rendering). Falls back to the full frame when a param is
-        unresolvable (the UDF raises its own KeyError) or nothing narrows."""
+        params keep their column; dotted params whose terminal fields are
+        plain (non-struct/map) values keep their root as a pruned struct
+        holding JUST those fields — the rest of the struct stays out of the
+        Python boundary, and _extract_param walks the pruned struct as it
+        would the whole one. (A flat column aliased to the dotted name
+        would not survive: mapInPandas/applyInPandas re-select every input
+        column unquoted, so ``file.path`` would parse as a nested field.)
+        Dotted params with struct terminals keep their whole root
+        (hydration consumes the dict rendering). Falls back to the full
+        frame when a param is unresolvable (the UDF raises its own
+        KeyError) or nothing narrows."""
         if not param_names:
             return self._df
         from pyspark.sql import types as T
 
         whole: list[str] = []
-        narrow: dict[str, Column] = {}
+        # root -> nested field tree of the narrowed paths (leaf = None)
+        narrow: dict[str, dict] = {}
         for p in param_names:
             if p in self._df.columns:
                 if p not in whole:
                     whole.append(p)
                 continue
-            dt, expr = _resolve_param_expr(self._df.schema, p)
+            dt, _ = _resolve_param_expr(self._df.schema, p)
+            root, *rest = p.split(".")
             if dt is not None and not isinstance(dt, (T.StructType, T.MapType)):
-                narrow[p] = expr
+                node = narrow.setdefault(root, {})
+                *path, leaf = rest
+                for part in path:
+                    node = node.setdefault(part, {})
+                node[leaf] = None
                 continue
-            root = p.split(".", 1)[0]
             if root in self._df.columns:
                 if root not in whole:
                     whole.append(root)
@@ -1738,8 +1747,19 @@ class DataChain:
                 return self._df
         if not narrow and len(whole) == len(self._df.columns):
             return self._df
+
+        def pruned(expr: Column, tree: dict) -> Column:
+            return F.struct(*[
+                (expr.getField(k) if sub is None
+                 else pruned(expr.getField(k), sub)).alias(k)
+                for k, sub in tree.items()
+            ])
+
         cols = [F.col(_quoted(c)) for c in self._df.columns if c in set(whole)]
-        cols.extend(expr.alias(p) for p, expr in narrow.items())
+        cols.extend(
+            pruned(F.col(_quoted(root)), tree).alias(root)
+            for root, tree in narrow.items() if root not in whole
+        )
         return self._df.select(*cols)
 
     def agg(
@@ -1898,24 +1918,15 @@ class DataChain:
         physical order per version)."""
         from .schema import serialize_signals
 
-        save_df = self._df
-        if zorder_by:
-            if bucket_by:
-                raise ValueError(
-                    "zorder_by and bucket_by are mutually exclusive — one "
-                    "physical layout per version"
-                )
-            from .ops.zorder import zorder_layout
-
-            save_df = zorder_layout(
-                save_df, zorder_by, bits=zorder_bits,
-                num_partitions=zorder_files, strategy=zorder_strategy,
+        if zorder_by and bucket_by:
+            raise ValueError(
+                "zorder_by and bucket_by are mutually exclusive — one "
+                "physical layout per version"
             )
-        live_models = {
-            c: m for c, m in self._signal_models.items() if c in self._df.columns
-        }
+        live_models = self._live_signal_models()
         dv = self.session.metastore.save_dataset(
-            save_df, name, version=version, update_version=update_version,
+            self._laid_out(zorder_by, zorder_bits, zorder_files, zorder_strategy),
+            name, version=version, update_version=update_version,
             attrs=attrs, description=description, dependencies=self._dependencies,
             bucket_by=list(bucket_by) if bucket_by else None,
             num_buckets=num_buckets,
@@ -1923,6 +1934,40 @@ class DataChain:
             signal_schema=serialize_signals(live_models) if live_models else None,
             schema_policy=schema_policy,
         )
+        return self._version_chain(name, dv, zone_index)
+
+    def _live_signal_models(self) -> dict[str, type]:
+        return {
+            c: m for c, m in self._signal_models.items() if c in self._df.columns
+        }
+
+    def _laid_out(
+        self,
+        zorder_by: Optional[Sequence[str]] = None,
+        zorder_bits: int = 8,
+        zorder_files: Optional[int] = None,
+        zorder_strategy: str = "minmax",
+    ) -> DataFrame:
+        """The frame a version write persists: this chain's, Morton-
+        clustered when ``zorder_by`` is set (see :meth:`save`)."""
+        if not zorder_by:
+            return self._df
+        from .ops.zorder import zorder_layout
+
+        return zorder_layout(
+            self._df, zorder_by, bits=zorder_bits,
+            num_partitions=zorder_files, strategy=zorder_strategy,
+        )
+
+    def _version_chain(
+        self, name: str, dv, zone_index: Optional[Sequence[str]] = None
+    ) -> "DataChain":
+        """The tail of every version write (:meth:`save` and delta_save's
+        by-reference write): build the requested zone map of the new
+        version, then return a chain reading the stored version verbatim,
+        with this chain's settings and signal models."""
+        from .catalog.metastore import split_name
+
         if zone_index:
             self.session.metastore.zone_index_dataset(
                 self.session.spark, name, list(zone_index),
@@ -1933,9 +1978,7 @@ class DataChain:
             df, self.session, self._settings,
             [{"dataset": name, "version": dv.version}],
         )
-        out._signal_models = dict(live_models)
-        from .catalog.metastore import split_name
-
+        out._signal_models = self._live_signal_models()
         ns, proj, base = split_name(name)
         out._dataset_info = {
             "name": name, "version": dv.version, "namespace": ns, "project": proj,

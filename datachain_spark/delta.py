@@ -23,7 +23,8 @@ whole run (parity with step-hash checkpoint reuse, hash_utils.py:32-120).
 from __future__ import annotations
 
 import hashlib
-import os
+import json
+from dataclasses import dataclass
 from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import functions as F
@@ -50,6 +51,48 @@ def fingerprint_fn(fn: Callable, extra: str = "") -> str:
         h.update(repr(fn).encode())
     h.update(extra.encode())
     return h.hexdigest()[:32]
+
+
+#: deepest ``extends_version`` chain a by-reference save may extend; the
+#: run that reaches it rewrites the dataset into a self-contained version
+MAX_CHAIN_DEPTH = 16
+
+#: save_kwargs a by-reference write honours: the layout and the zone map
+#: (the write keeps the base schema, so any schema_policy holds)
+_BY_REF_SAVE_KW = {
+    "zone_index", "zorder_by", "zorder_bits", "zorder_files",
+    "zorder_strategy", "schema_policy",
+}
+
+
+@dataclass
+class _Run:
+    """One :func:`delta_save` call's inputs — what its full, converged
+    and incremental exits share."""
+
+    sess: Session
+    source: DataChain
+    process: Callable[[DataChain], DataChain]
+    name: str
+    keys: list
+    cmp_list: Optional[list]
+    job_hash: str
+    save_kw: dict
+    ann_index: Optional[dict]
+    bm25_index: Optional[dict]
+    gram_index: Optional[dict]
+    profile: Optional[dict]
+    compact_target_bytes: Optional[int]
+    #: delta_source_* attrs pinning a stored-version source, else None
+    src_pin: Optional[dict] = None
+
+    @property
+    def snap_name(self) -> str:
+        return f"{self.name}__delta_source"
+
+    @property
+    def flat_keys(self) -> list:
+        return [k.replace(".", "__") for k in self.keys]
 
 
 def delta_save(
@@ -113,10 +156,10 @@ def delta_save(
       r09 verdict task 2): a full profile on the first run; on
       incremental runs the APPEND-ONLY fast path — sketch only this
       run's processed rows and merge into the previous version's stored
-      profile — is taken exactly when the run reprocessed no existing
-      key and deleted none (merge == profile-the-union only then);
-      any modify/delete/retry churn forces a full re-profile of the new
-      version, honoring the contract at ops/release.py
+      profile — is taken exactly when the run displaced no previous
+      result row and deleted none (merge == profile-the-union only
+      then); any other modify/delete/retry churn forces a full
+      re-profile of the new version, honoring the contract at ops/release.py
       (``profile_version`` increment docstring).
     - ``compact_target_bytes=<bytes>`` runs OPTIMIZE-style maintenance
       inside the pipeline: when a save leaves the new version fragmented
@@ -149,75 +192,21 @@ def delta_save(
     """
     sess = session or source.session
     keys = [delta_on] if isinstance(delta_on, str) else list(delta_on)
-    snap_name = f"{name}__delta_source"
-    save_kw = dict(save_kwargs or {})
-
-    def _refresh_ann(changed_keys_df=None, diffed_against=None) -> None:
-        if ann_index:
-            opts = dict(ann_index)
-            id_col = opts.pop("id_col")
-            if changed_keys_df is not None and keys == [id_col]:
-                opts["changed_keys"] = changed_keys_df
-                # the key set is only sound against the version this run
-                # diffed from — the refresh drops it (vector-compare
-                # fallback) when its base generation is a different one
-                opts["changed_since"] = diffed_against
-            sess.metastore.ann_index_refresh(
-                sess.spark, name, id_col, **opts
-            )
-        if bm25_index:
-            if sess.metastore._newest_bm25_generation(
-                sess.spark, name
-            ) is None:
-                sess.metastore.bm25_index_dataset(
-                    sess.spark, name, **bm25_index
-                )
-            else:
-                sess.metastore.bm25_index_refresh(sess.spark, name)
-        if gram_index:
-            if sess.metastore._newest_grams_generation(
-                sess.spark, name
-            ) is None:
-                sess.metastore.gram_index_dataset(
-                    sess.spark, name, **gram_index
-                )
-            else:
-                sess.metastore.gram_index_refresh(sess.spark, name)
-
-    def _refresh_profile(increment_df=None, base_version=None) -> None:
-        if not profile:
-            return
-        from .ops.release import profile_version
-
-        profile_version(
-            name, session=sess, increment=increment_df,
-            base_version=base_version, **profile,
-        )
-
-    def _maybe_compact() -> None:
-        """Compact the just-saved head when it is fragmented beyond the
-        target layout. Runs BEFORE the index/profile maintenance (so
-        each runs exactly once, against the final head) and before the
-        job-hash stamp (so the stamp lands on the compacted version —
-        the next run's checkpoint base). The fragmentation predicate is
-        the metastore's own (should_compact), never a local copy."""
-        if not compact_target_bytes:
-            return
-        if sess.metastore.should_compact(name, None, compact_target_bytes):
-            sess.metastore.compact_dataset(
-                sess.spark, name, target_file_bytes=compact_target_bytes,
-            )
-
-    prev_result_rec = sess.metastore.get_record(name)
-    prev_snap_rec = sess.metastore.get_record(snap_name)
-
-    job_hash = fingerprint_fn(process, extra=",".join(keys) + _job_extra)
-
-    cmp_list = (
-        None if delta_compare is None
-        else [delta_compare] if isinstance(delta_compare, str)
-        else list(delta_compare)
+    ms = sess.metastore
+    run = _Run(
+        sess=sess, source=source, process=process, name=name, keys=keys,
+        cmp_list=(
+            None if delta_compare is None
+            else [delta_compare] if isinstance(delta_compare, str)
+            else list(delta_compare)
+        ),
+        job_hash=fingerprint_fn(process, extra=",".join(keys) + _job_extra),
+        save_kw=dict(save_kwargs or {}), ann_index=ann_index,
+        bm25_index=bm25_index, gram_index=gram_index, profile=profile,
+        compact_target_bytes=compact_target_bytes,
     )
+    prev_result_rec = ms.get_record(name)
+    prev_snap_rec = ms.get_record(run.snap_name)
 
     # pin-not-copy (guide §2.3/§8 — store keys and metadata, not
     # payloads): when the source IS a stored dataset version read
@@ -226,75 +215,34 @@ def delta_save(
     # (reference parity: delta reads the previous *dataset version* of
     # the source). Any transformation drops the marker via _evolve.
     info = getattr(source, "_dataset_info", None) or {}
-    src_pin = None
-    src_pin_uuid = None
     if (
         getattr(source, "_pristine_version_read", False)
         and info.get("name") and info.get("version")
     ):
-        src_pin = (info["name"], info["version"])
         # pin the version's UUID too: a delete_dataset(force=True) + re-save
         # can reuse the same version STRING for different contents — the
         # uuid makes such a recreated version force the diff/full path
         # instead of silently converging against stale results
         try:
-            src_pin_uuid = (
-                sess.metastore.get_record(src_pin[0])
-                .get_version(src_pin[1]).uuid
-            )
-        except Exception:  # noqa: BLE001 — unreadable pin: treat as unpinned
-            src_pin = None
-
-    def _snapshot_source() -> dict:
-        """Persist what the next run's diff needs, the cheapest sound
-        way; returns the pin attrs to stamp on the result head.
-
-        - dataset-version source: write nothing (the pin identifies it);
-        - raw source with explicit delta_compare: keys+compare columns
-          only — diff(added/modified) takes left-side values and the
-          deleted probe is keys-only, so the old side's payload columns
-          are never read (a full-width copy of a 100-TB source per run
-          otherwise);
-        - raw source, compare=None: full snapshot (the diff compares
-          every common column).
-        """
-        if src_pin is not None:
-            return {
-                "delta_source_dataset": src_pin[0],
-                "delta_source_version": src_pin[1],
-                "delta_source_uuid": src_pin_uuid,
+            run.src_pin = {
+                "delta_source_dataset": info["name"],
+                "delta_source_version": info["version"],
+                "delta_source_uuid": ms.get_record(info["name"])
+                .get_version(info["version"]).uuid,
             }
-        narrow = None
-        if cmp_list is not None:
-            want = list(dict.fromkeys([*keys, *cmp_list]))
-            cols = set(source.df.columns)
-            if all(("." not in c) and c in cols for c in want):
-                narrow = want
-        if narrow is not None:
-            source.select(*narrow).save(
-                snap_name, attrs={"delta_snap_cols": ",".join(narrow)}
-            )
-        else:
-            source.save(snap_name)
-        return {}
+        except Exception:  # noqa: BLE001 — unreadable pin: treat as unpinned
+            run.src_pin = None
 
     prev_version = (
         prev_result_rec.latest_version() if prev_result_rec else None
     )
-    pin_name = prev_version.attrs.get("delta_source_dataset") if prev_version else None
-    pin_ver = prev_version.attrs.get("delta_source_version") if prev_version else None
-
-    def _full_run() -> DataChain:
-        result = process(source).save(name, **save_kw)
-        _maybe_compact()
-        _refresh_ann()
-        _refresh_profile()
-        _stamp_meta(sess, name, job_hash, _snapshot_source())
-        return result
+    prev_attrs = prev_version.attrs if prev_version else {}
+    pin_name = prev_attrs.get("delta_source_dataset")
+    pin_ver = prev_attrs.get("delta_source_version")
 
     if prev_result_rec is None or (prev_snap_rec is None and not pin_name):
         # first run: full compute
-        return _full_run()
+        return _full_run(run)
 
     # zero-job convergence: the source is the exact dataset version the
     # previous run processed and the code is unchanged — contents are
@@ -303,56 +251,44 @@ def delta_save(
     # converge without a single Spark job). delta_retry still forces the
     # diff path: error rows must reprocess even from an unchanged source.
     if (
-        src_pin is not None and not delta_retry
-        and (pin_name, pin_ver) == src_pin
+        run.src_pin is not None and not delta_retry
+        and (pin_name, pin_ver) == (
+            run.src_pin["delta_source_dataset"],
+            run.src_pin["delta_source_version"],
+        )
         # a recreated version (same string, new uuid) must NOT converge;
         # a legacy pin without a stored uuid keeps its old behavior
-        and prev_version.attrs.get("delta_source_uuid")
-        in (None, src_pin_uuid)
-        and prev_version.job_hash == job_hash
+        and prev_attrs.get("delta_source_uuid")
+        in (None, run.src_pin["delta_source_uuid"])
+        and prev_version.job_hash == run.job_hash
     ):
-        prev_df, _, _ = sess.metastore.load_dataset(
-            sess.spark, name, prev_version.version
-        )
-        return _delta_apply(
-            sess, source, process, name, keys,
-            [k.replace(".", "__") for k in keys],
-            prev_version, prev_df, None, None, None, None,
-            0, 0, job_hash, snap_name, save_kw, ann_index,
-            bm25_index, gram_index, profile, compact_target_bytes,
-            _refresh_ann, _refresh_profile, _maybe_compact,
-            _snapshot_source, src_pin,
-        )
+        return _converge(run, prev_version)
 
     # resolve the previous source contents: pinned dataset version first,
     # stored snapshot otherwise
     prev_snap = None
     if pin_name:
         try:
-            psdf, _, psdv_pin = sess.metastore.load_dataset(
-                sess.spark, pin_name, pin_ver
-            )
-            pin_uuid = prev_version.attrs.get("delta_source_uuid")
-            if pin_uuid is not None and psdv_pin.uuid != pin_uuid:
-                # same version string, different contents (deleted with
-                # force=True and re-saved): the contents the previous run
-                # processed are gone — diffing against the recreated
-                # version would mislabel its rows as "unchanged"
-                prev_snap = None
-            else:
+            psdf, _, psdv_pin = ms.load_dataset(sess.spark, pin_name, pin_ver)
+            pin_uuid = prev_attrs.get("delta_source_uuid")
+            # same version string, different contents (deleted with
+            # force=True and re-saved): the contents the previous run
+            # processed are gone — diffing against the recreated version
+            # would mislabel its rows as "unchanged"
+            if pin_uuid is None or psdv_pin.uuid == pin_uuid:
                 prev_snap = DataChain(psdf, sess)
         except Exception:  # noqa: BLE001 — pinned version vacuumed
             prev_snap = None
     elif prev_snap_rec is not None:
-        psdf, _, psdv = sess.metastore.load_dataset(sess.spark, snap_name)
+        psdf, _, psdv = ms.load_dataset(sess.spark, run.snap_name)
         snap_cols = psdv.attrs.get("delta_snap_cols")
         if snap_cols:
             stored = set(snap_cols.split(","))
-            want = set(keys) | set(cmp_list or [])
+            want = set(keys) | set(run.cmp_list or [])
             # a narrow snapshot only answers the diff it was written
             # for: this run must use explicit compare columns the
             # snapshot carries; anything else can't see modifications
-            if cmp_list is not None and want <= stored:
+            if run.cmp_list is not None and want <= stored:
                 prev_snap = DataChain(psdf, sess)
         else:
             prev_snap = DataChain(psdf, sess)
@@ -361,11 +297,11 @@ def delta_save(
         # snapshot that can't answer this run's compare): reprocess
         # everything — one full pass, never wrong (vanished keys drop
         # because the fresh save IS the whole result)
-        return _full_run()
+        return _full_run(run)
 
-    # the A/M status rides along so the append fast path can prove "no
-    # reprocessed key displaced a previous row" from the SAME diff scan
-    # (an extra join against prev keys would re-read the old side)
+    # the A/M status rides along so a pure append (no key reprocessed,
+    # none deleted) is proven from the SAME diff scan (an extra join
+    # against prev keys would re-read the old side)
     changed_st = source.diff(
         prev_snap, on=keys, compare=delta_compare,
         added=True, modified=True, deleted=False, same=False,
@@ -375,13 +311,13 @@ def delta_save(
     # rows that disappeared from the source (their results must drop)
     deleted = prev_snap.subtract(source, on=keys)
 
-    prev_df, _, _ = sess.metastore.load_dataset(sess.spark, name, prev_version.version)
+    prev_df, _, _ = ms.load_dataset(sess.spark, name, prev_version.version)
     prev_result = DataChain(prev_df, sess)
 
     # dotted keys (e.g. "file.path"): selecting them yields the LEAF name,
     # so key-only projections alias to a flat stand-in and joins use
     # on=keys / right_on=flat
-    flat_keys = [k.replace(".", "__") for k in keys]
+    flat_keys = run.flat_keys
 
     def _key_sel(df):
         return df.select(*[F.col(k).alias(f) for k, f in zip(keys, flat_keys)])
@@ -429,21 +365,19 @@ def delta_save(
                                dependencies=changed._dependencies)
 
     # keys(+status)-only projections, computed ONCE and cached: they feed
-    # the row counts, the stale-key union, the ANN changed-key set, the
-    # append-mode displacement proof, and the post-save
-    # profile-increment semi-join — without the cache each reuse re-runs
-    # the corpus-sized diff/subtract plan (one redundant full job per
-    # profiled save at 100 TB)
-    n_modified = None
+    # the row counts, the stale-key set, the ANN changed-key set and the
+    # rewrite path's profile-increment semi-join — without the cache each
+    # reuse re-runs the corpus-sized diff/subtract plan (one redundant
+    # full job per profiled save at 100 TB)
     if to_process is changed:
         # no retry union: count adds and modifications in ONE job over
         # the cached key+status projection
-        proc_keys_st = changed_st.df.select(
+        cached = changed_st.df.select(
             *[F.col(k).alias(f) for k, f in zip(keys, flat_keys)],
             "__delta_st",
         ).persist()
-        proc_keys = proc_keys_st.drop("__delta_st")
-        row = proc_keys_st.agg(
+        proc_keys = cached.drop("__delta_st")
+        row = cached.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
                 F.when(F.col("__delta_st") == "M", 1).otherwise(0)
@@ -451,342 +385,287 @@ def delta_save(
         ).collect()[0]
         n_changed = int(row["n"])
         n_modified = int(row["m"] or 0)
-        cached = proc_keys_st
     else:
-        proc_keys = _key_sel(to_process.df).persist()
+        cached = proc_keys = _key_sel(to_process.df).persist()
         n_changed = proc_keys.count()
-        cached = proc_keys
-    del_keys = _key_sel(deleted.df)
+        n_modified = None  # retried keys may displace previous rows
     # n_deleted is needed by the convergence check, the profile
-    # fast-path gate AND the append-mode proof — always one keys-only
+    # increment gate and the pure-append proof — always one keys-only
     # subtract over the (narrow/pinned) old side
-    del_keys = del_keys.persist()
+    del_keys = _key_sel(deleted.df).persist()
     n_deleted = del_keys.count()
     try:
-        return _delta_apply(
-            sess, source, process, name, keys, flat_keys, prev_version,
-            prev_df, prev_result, to_process, proc_keys, del_keys,
-            n_changed, n_deleted, job_hash, snap_name, save_kw, ann_index,
-            bm25_index, gram_index, profile, compact_target_bytes,
-            _refresh_ann, _refresh_profile, _maybe_compact,
-            _snapshot_source, src_pin, n_modified,
+        if n_changed == 0 and n_deleted == 0 and prev_version.job_hash == run.job_hash:
+            return _converge(run, prev_version)
+
+        processed = process(to_process)
+        if set(processed.columns) != set(prev_result.columns):
+            raise SchemaDriftError(
+                f"delta re-run schema {sorted(processed.columns)} != previous "
+                f"result schema {sorted(prev_result.columns)}"
+            )
+
+        # BY-REFERENCE WRITE: the new version is the previous version's
+        # files by reference plus only the processed rows — an O(churn)
+        # write instead of the full kept∪processed corpus rewrite. A pure
+        # append (nothing reprocessed, nothing deleted) writes just that;
+        # any other churn adds a churn-sized TOMBSTONE key set — exactly
+        # the keys the rewrite's subtract would remove — and readers hide
+        # base rows whose key a later chain link tombstones. Everything
+        # downstream (reads, indexes, profile, compaction, fragmentation
+        # accounting) resolves the chain through the manifest;
+        # compact_target_bytes heals long chains into self-contained
+        # copies, and a chain MAX_CHAIN_DEPTH links deep takes the rewrite
+        # instead, bounding per-read file listing and the tombstone
+        # anti-join state. Tombstones only pay off while churn is the
+        # minority: past half the corpus, the rewrite reads less than
+        # chain+tombstone reads would cost every downstream scan.
+        stale_keys = proc_keys.unionByName(del_keys).dropDuplicates()
+        pure_append = n_modified == 0 and n_deleted == 0
+        churn = n_changed + n_deleted
+        prev_types = {f.name: f.dataType for f in prev_result.df.schema.fields}
+        proc_types = {f.name: f.dataType for f in processed.df.schema.fields}
+        by_ref = (
+            churn > 0
+            and (pure_append or 2 * churn <= prev_version.num_rows)
+            and not prev_version.bucket
+            and prev_types == proc_types
+            and set(run.save_kw) <= _BY_REF_SAVE_KW
+            and len(ms._extends_closure(prev_result_rec, prev_version))
+            < MAX_CHAIN_DEPTH
         )
+        new_dv = n_displaced = None
+        if by_ref:
+            rows = processed._evolve(processed.df.select(*prev_result.df.columns))
+            new_dv, n_displaced = ms.extend_dataset_version(
+                sess.spark,
+                rows._laid_out(**{
+                    k: v for k, v in run.save_kw.items() if k.startswith("zorder_")
+                }),
+                name, prev_version,
+                None if pure_append else stale_keys, keys,
+                dependencies=processed._dependencies,
+            )
+            result = rows._version_chain(name, new_dv, run.save_kw.get("zone_index"))
+        else:
+            # previous results still valid: key not reprocessed, not deleted
+            kept = prev_result.subtract(
+                DataChain(stale_keys, sess), on=keys, right_on=flat_keys,
+            )
+            # _evolve keeps the processed branch's lineage (the source's
+            # dataset/storage pins plus anything process() merged in) and
+            # its signal models
+            result = processed._evolve(
+                kept.df.unionByName(processed.df, allowMissingColumns=False)
+            ).save(name, **run.save_kw)
+        _compact(run)
+        _maintain_indexes(
+            run, changed_keys=proc_keys, diffed_against=prev_version.version
+        )
+        if profile:
+            _profile_increment_or_full(
+                run, prev_version, proc_keys, n_deleted, new_dv, n_displaced
+            )
+        _finish(run)
+        return result
     finally:
         cached.unpersist()
         del_keys.unpersist()
 
 
-def _delta_apply(
-    sess, source, process, name, keys, flat_keys, prev_version, prev_df,
-    prev_result, to_process, proc_keys, del_keys, n_changed, n_deleted,
-    job_hash, snap_name, save_kw, ann_index, bm25_index, gram_index,
-    profile, compact_target_bytes, _refresh_ann, _refresh_profile,
-    _maybe_compact, _snapshot_source, src_pin, n_modified=None,
-):
-    """The diff-apply-merge tail of :func:`delta_save`, split out so the
-    cached key projections (``proc_keys``/``del_keys``) un-persist on
-    every exit path. Closures (`_refresh_*`, `_maybe_compact`) carry the
-    index/profile/compaction config."""
-    if n_changed == 0 and n_deleted == 0 and prev_version.job_hash == job_hash:
-        # indexes requested but missing OR linked to an OLDER version
-        # (e.g. an intermediate run saved without index maintenance):
-        # bring them up to the current latest version now
-        if ann_index:
-            gen = sess.metastore._newest_ann_generation(sess.spark, name)
-            if gen is None or gen[2] != prev_version.version:
-                opts = dict(ann_index)
-                sess.metastore.ann_index_refresh(
-                    sess.spark, name, opts.pop("id_col"), **opts
-                )
-        if bm25_index:
-            bgen = sess.metastore._newest_bm25_generation(sess.spark, name)
-            if bgen is None or bgen[2].get(
-                "bm25_of_version"
-            ) != prev_version.version:
-                if bgen is None:
-                    sess.metastore.bm25_index_dataset(
-                        sess.spark, name, **bm25_index
-                    )
-                else:
-                    sess.metastore.bm25_index_refresh(sess.spark, name)
-        if gram_index:
-            ggen = sess.metastore._newest_grams_generation(sess.spark, name)
-            if ggen is None:
-                sess.metastore.gram_index_dataset(
-                    sess.spark, name, **gram_index
-                )
-            elif ggen[2].get("grams_of_version") != prev_version.version:
-                sess.metastore.gram_index_refresh(sess.spark, name)
-        if save_kw.get("zone_index"):
-            # zone maps rebuild inside .save(); a converged pipeline that
-            # just TURNED ON zone_index never reaches a save, so
-            # read_dataset(prune=...) would raise until the next real
-            # change — build the missing map for the current version here
-            from .error import DatasetNotFoundError
+def _full_run(run: _Run) -> DataChain:
+    result = run.process(run.source).save(run.name, **run.save_kw)
+    _compact(run)
+    _maintain_indexes(run)
+    _profile(run)
+    _finish(run)
+    return result
 
-            try:
-                sess.metastore._load_zone_index(
-                    sess.spark, name, prev_version.version
-                )
-            except DatasetNotFoundError:
-                sess.metastore.zone_index_dataset(
-                    sess.spark, name, list(save_kw["zone_index"]),
-                    version=prev_version.version,
-                )
-        if profile and not _has_matching_profile(
-            sess, name, prev_version.version, profile
-        ):
-            _refresh_profile()
-        # the converged head IS the current source version's result (the
-        # diff just proved contents identical) — re-pin its recorded
-        # dataset dependencies to the source's current versions so
-        # lineage staleness converges; otherwise a no-change upstream
-        # re-save leaves every downstream flagged stale forever and
-        # refresh_downstream re-runs no-op pipelines on every cascade
-        src_by_name = {
-            d.get("dataset"): d
-            for d in source._dependencies
-            if d.get("dataset")
-        }
-        if src_by_name:
-            rec2 = sess.metastore.get_record(name)
-            v2 = rec2.get_version(prev_version.version)
-            changed_pin = False
-            seen = set()
-            for d in v2.dependencies:
-                nd = src_by_name.get(d.get("dataset"))
-                if nd is not None:
-                    seen.add(d.get("dataset"))
-                    if nd.get("version") != d.get("version"):
-                        d["version"] = nd.get("version")
-                        changed_pin = True
-            for nm, nd in src_by_name.items():
-                if nm not in seen:
-                    v2.dependencies.append(dict(nd))
-                    changed_pin = True
-            if changed_pin:
-                sess.metastore._write_record(rec2)
-        if src_pin is not None:
-            # advance the stored source pin to the version this run
-            # diffed (contents identical): the next unchanged run then
-            # converges with ZERO Spark jobs instead of re-proving an
-            # empty diff (manifest-only write)
-            rec3 = sess.metastore.get_record(name)
-            v3 = rec3.get_version(prev_version.version)
-            new_uuid = None
-            try:
-                new_uuid = (
-                    sess.metastore.get_record(src_pin[0])
-                    .get_version(src_pin[1]).uuid
-                )
-            except Exception:  # noqa: BLE001
-                pass
-            if (
-                v3.attrs.get("delta_source_dataset"),
-                v3.attrs.get("delta_source_version"),
-                v3.attrs.get("delta_source_uuid"),
-            ) != (*src_pin, new_uuid):
-                v3.attrs["delta_source_dataset"] = src_pin[0]
-                v3.attrs["delta_source_version"] = src_pin[1]
-                v3.attrs["delta_source_uuid"] = new_uuid
-                sess.metastore._write_record(rec3)
-        if compact_target_bytes and sess.metastore.should_compact(
-            name, None, compact_target_bytes
-        ):
-            # compaction newly enabled on a converged pipeline: the head
-            # is fragmented from earlier rounds — compact it now and
-            # re-stamp the (unchanged) job hash on the compacted head so
-            # the next run still no-ops
-            sess.metastore.compact_dataset(
-                sess.spark, name, target_file_bytes=compact_target_bytes,
-            )
-            _stamp_job_hash(sess, name, job_hash)
-        return DataChain(prev_df, sess)
 
-    processed = process(to_process)
-    if set(processed.columns) != set(prev_result.columns):
-        raise SchemaDriftError(
-            f"delta re-run schema {sorted(processed.columns)} != previous "
-            f"result schema {sorted(prev_result.columns)}"
-        )
+def _converge(run: _Run, prev_version) -> DataChain:
+    """Exit of a run whose source matches the previous one and whose code
+    is unchanged: the head already IS this run's result, so nothing is
+    rewritten — only maintenance the head lacks catches up (indexes,
+    zone map or profile newly requested or linked to an older version,
+    compaction newly enabled) and the pins advance."""
+    sess, name, ms = run.sess, run.name, run.sess.metastore
+    _maintain_indexes(run, converged=prev_version.version)
+    if run.profile and not _has_matching_profile(
+        sess, name, prev_version.version, run.profile
+    ):
+        _profile(run)
+    # re-pin the head's recorded dataset dependencies to the source's
+    # current versions so lineage staleness converges; otherwise a
+    # no-change upstream re-save leaves every downstream flagged stale
+    # forever and refresh_downstream re-runs no-op pipelines on every
+    # cascade. A pinned source's pin advances to the version this run
+    # diffed (contents identical): the next unchanged run then converges
+    # with ZERO Spark jobs instead of re-proving an empty diff
+    # (manifest-only write).
+    rec = ms.get_record(name)
+    head = rec.get_version(prev_version.version)
+    src_by_name = {
+        d.get("dataset"): d for d in run.source._dependencies if d.get("dataset")
+    }
+    seen = {d.get("dataset") for d in head.dependencies}
+    changed = False
+    for d in head.dependencies:
+        nd = src_by_name.get(d.get("dataset"))
+        if nd is not None and nd.get("version") != d.get("version"):
+            d["version"] = nd.get("version")
+            changed = True
+    for nm, nd in src_by_name.items():
+        if nm not in seen:
+            head.dependencies.append(dict(nd))
+            changed = True
+    if run.src_pin is not None and any(
+        head.attrs.get(k) != v for k, v in run.src_pin.items()
+    ):
+        head.attrs.update(run.src_pin)
+        changed = True
+    if changed:
+        ms._write_record(rec)
+    if _compact(run):
+        # re-stamp the (unchanged) job hash on the compacted head so the
+        # next run still no-ops
+        _stamp_job_hash(sess, name, run.job_hash)
+    df, _, _ = ms.load_dataset(sess.spark, name, prev_version.version)
+    out = DataChain(df, sess)
+    if prev_version.signal_schema:
+        from .schema import deserialize_signals
 
-    # APPEND FAST PATH (r11): when the diff proved this run added rows
-    # and displaced/deleted none, the new version is the previous
-    # version's files BY REFERENCE plus only the processed rows — an
-    # O(churn) write instead of the full kept∪processed corpus rewrite.
-    # EXTEND FAST PATH (r12): modified/deleted churn takes the same
-    # by-reference layout plus a churn-sized TOMBSTONE key set — readers
-    # hide base rows whose key a later chain link tombstones, so an
-    # update-heavy increment also stops rewriting the corpus.
-    # Everything downstream (reads, indexes, profile, compaction,
-    # fragmentation accounting) resolves the chain through the manifest;
-    # compact_target_bytes heals long chains into self-contained copies,
-    # and both paths refuse chains deeper than
-    # $DATACHAIN_SPARK_MAX_CHAIN_DEPTH (default 16) — the next run then
-    # does one full save, bounding per-read file listing and the
-    # tombstone anti-join state.
-    prev_types = {f.name: f.dataType for f in prev_result.df.schema.fields}
-    proc_types = {f.name: f.dataType for f in processed.df.schema.fields}
-    max_depth = int(os.environ.get("DATACHAIN_SPARK_MAX_CHAIN_DEPTH", "16"))
-    rec_now = sess.metastore.get_record(name)
-    chain_depth = len(sess.metastore._extends_closure(
-        rec_now, rec_now.get_version(prev_version.version)
-    ))
-    extend_ok = (
-        not prev_version.bucket
-        and prev_types == proc_types
-        and chain_depth < max_depth
-        and not (
-            set(save_kw)
-            - {"zone_index", "zorder_by", "zorder_bits", "zorder_files",
-               "zorder_strategy", "schema_policy"}
-        )
+        out._signal_models = deserialize_signals(prev_version.signal_schema)
+    return out
+
+
+def _compact(run: _Run) -> bool:
+    """Compact the head when it is fragmented beyond the target layout
+    (the metastore's own should_compact predicate). Runs before the
+    index/profile maintenance of a write (so each runs once, against the
+    final head) and before the job-hash stamp (so the stamp lands on the
+    compacted version — the next run's checkpoint base)."""
+    ms = run.sess.metastore
+    if not run.compact_target_bytes or not ms.should_compact(
+        run.name, None, run.compact_target_bytes
+    ):
+        return False
+    ms.compact_dataset(
+        run.sess.spark, run.name, target_file_bytes=run.compact_target_bytes,
     )
-    append_mode = (
-        extend_ok and n_modified == 0 and n_deleted == 0 and n_changed > 0
-    )
-    # the extend path only pays off while churn is the minority: past
-    # half the corpus, the rewrite reads less than chain+tombstone reads
-    # would cost every downstream scan
-    extend_mode = (
-        extend_ok and not append_mode
-        and (n_changed + n_deleted) > 0
-        and prev_version.num_rows > 0
-        and 2 * (n_changed + n_deleted) <= prev_version.num_rows
-    )
-    if append_mode or extend_mode:
-        new_rows = processed.df.select(*prev_result.df.columns)
-        if save_kw.get("zorder_by"):
-            from .ops.zorder import zorder_layout
+    return True
 
-            new_rows = zorder_layout(
-                new_rows, save_kw["zorder_by"],
-                bits=save_kw.get("zorder_bits", 8),
-                num_partitions=save_kw.get("zorder_files"),
-                strategy=save_kw.get("zorder_strategy", "minmax"),
+
+def _maintain_indexes(
+    run: _Run, converged: Optional[str] = None, changed_keys=None,
+    diffed_against: Optional[str] = None,
+) -> None:
+    """Bring every index the run maintains up to the head: a full build
+    when none exists, else a refresh from the newest generation.
+
+    ``converged``: the head's version when the run wrote nothing — an
+    index already built for it is left alone, and a requested zone map
+    that is missing gets built (a written version builds its own in
+    save). ``changed_keys``/``diffed_against``: the reprocessed key set
+    and the version it was diffed from, handed to the ANN refresh when
+    the delta key IS the index id (the refresh drops the set, falling
+    back to vector comparison, when its base generation is another)."""
+    sess, name, ms = run.sess, run.name, run.sess.metastore
+    if run.ann_index:
+        opts = dict(run.ann_index)
+        id_col = opts.pop("id_col")
+        gen = ms._newest_ann_generation(sess.spark, name) if converged else None
+        if gen is None or gen[2] != converged:
+            if changed_keys is not None and run.keys == [id_col]:
+                opts.update(changed_keys=changed_keys, changed_since=diffed_against)
+            ms.ann_index_refresh(sess.spark, name, id_col, **opts)
+    for spec, newest, build, refresh, of_version in (
+        (run.bm25_index, ms._newest_bm25_generation, ms.bm25_index_dataset,
+         ms.bm25_index_refresh, "bm25_of_version"),
+        (run.gram_index, ms._newest_grams_generation, ms.gram_index_dataset,
+         ms.gram_index_refresh, "grams_of_version"),
+    ):
+        if not spec:
+            continue
+        gen = newest(sess.spark, name)
+        if gen is None:
+            build(sess.spark, name, **spec)
+        elif converged is None or gen[2].get(of_version) != converged:
+            refresh(sess.spark, name)
+    if converged and run.save_kw.get("zone_index"):
+        from .error import DatasetNotFoundError
+
+        try:
+            ms._load_zone_index(sess.spark, name, converged)
+        except DatasetNotFoundError:
+            ms.zone_index_dataset(
+                sess.spark, name, list(run.save_kw["zone_index"]),
+                version=converged,
             )
-        if append_mode:
-            new_dv = sess.metastore.append_dataset_version(
-                new_rows, name, prev_version,
-                dependencies=processed._dependencies,
-            )
+
+
+def _profile(run: _Run, increment=None, base_version=None) -> None:
+    if not run.profile:
+        return
+    from .ops.release import profile_version
+
+    profile_version(
+        run.name, session=run.sess, increment=increment,
+        base_version=base_version, **run.profile,
+    )
+
+
+def _profile_increment_or_full(
+    run: _Run, prev_version, proc_keys, n_deleted, new_dv, n_displaced,
+) -> None:
+    """Profile the version an incremental run just wrote. Merging an
+    increment into the previous version's stored profile is sound only
+    when the run deleted nothing and displaced no previous-result row —
+    any churn double-counts in a merged sketch, so churn re-profiles the
+    new version from scratch (as does a stored profile built with another
+    config). The increment is always read from what was SAVED, never the
+    lazy processed plan: re-evaluating a nondeterministic process() could
+    profile rows that differ from the persisted ones.
+
+    - by-reference write (``new_dv``): the writer counted the displaced
+      rows, and its churn files ARE the increment — O(churn), no head
+      scan (even if compaction just rewrote the head, the churn dir still
+      holds exactly the written rows);
+    - rewrite: the increment is the head's rows carrying a reprocessed
+      key (one churn-key semi-join — the delta contract keeps key values
+      unchanged through process()), and the head's num_rows minus its
+      count is the number of previous rows kept."""
+    sess, name = run.sess, run.name
+    inc = None
+    if n_deleted == 0 and _has_matching_profile(
+        sess, name, prev_version.version, run.profile
+    ):
+        if new_dv is not None:
+            if n_displaced == 0:
+                from pyspark.sql import types as T
+
+                inc = sess.spark.read.schema(
+                    T.StructType.fromJson(json.loads(new_dv.schema_json))
+                ).parquet(sess.metastore.version_data_path(name, new_dv.version))
         else:
-            # the tombstones are exactly the keys the rewrite path's
-            # subtract would remove: every reprocessed key plus every
-            # deleted key (an added key hits nothing in the base)
-            stale = proc_keys.unionByName(del_keys).dropDuplicates()
-            new_dv = sess.metastore.extend_dataset_version(
-                sess.spark, new_rows, name, prev_version,
-                stale, keys,
-                dependencies=processed._dependencies,
-            )
-        if save_kw.get("zone_index"):
-            sess.metastore.zone_index_dataset(
-                sess.spark, name, list(save_kw["zone_index"]),
-                version=new_dv.version,
-            )
-        from .catalog.metastore import split_name
-
-        rdf, _, _ = sess.metastore.load_dataset(
-            sess.spark, name, new_dv.version
-        )
-        result = DataChain(
-            rdf, sess, source._settings,
-            [{"dataset": name, "version": new_dv.version}],
-        )
-        ns, proj, base = split_name(name)
-        result._dataset_info = {
-            "name": name, "version": new_dv.version,
-            "namespace": ns, "project": proj,
-        }
-        result._pristine_version_read = True
-    else:
-        # previous results still valid: key not reprocessed, not deleted
-        stale_keys = DataChain(
-            proc_keys.unionByName(del_keys).dropDuplicates(), sess,
-        )
-        kept = prev_result.subtract(stale_keys, on=keys, right_on=flat_keys)
-        # the incremental save must keep recording the chain's lineage:
-        # the processed branch carries the source's dataset/storage pins
-        # (plus anything process() merged in) — without them the saved
-        # version's dependency record goes empty after run 1 and the
-        # cascade-refresh staleness walk (lineage.refresh_downstream)
-        # loses the edge
-        merged = DataChain(
-            kept.df.unionByName(processed.df, allowMissingColumns=False),
-            sess, dependencies=processed._dependencies,
-        )
-        result = merged.save(name, **save_kw)
-    _maybe_compact()
-    _refresh_ann(
-        changed_keys_df=proc_keys if len(keys) == 1 else None,
-        diffed_against=prev_version.version,
-    )
-    if profile:
-        # the increment-merge fast path is sound only when this run was
-        # PURE APPEND: nothing deleted and no reprocessed key displaced a
-        # previous-result row — any churn double-counts in a merged
-        # sketch, so churn re-profiles the new version from scratch.
-        # Both the displacement check and the increment itself read the
-        # SAVED head, never the lazy `processed` plan: re-evaluating a
-        # nondeterministic process() after the save could profile rows
-        # that differ from the ones actually persisted, and the old
-        # `kept.count()` re-ran the corpus-sized subtract a second time —
-        # the head's recorded num_rows minus the increment's count gives
-        # the same number from one churn-key semi-join instead. (The
-        # delta contract keeps delta_on key VALUES unchanged through
-        # process(), so every persisted increment row carries a proc_key;
-        # a pipeline that mutated keys would already misalign the next
-        # run's diff.)
-        if append_mode and _has_matching_profile(
-            sess, name, prev_version.version, profile
-        ):
-            # the churn files ARE the persisted increment: read them
-            # back directly — no head scan, no displacement arithmetic
-            # (the diff already proved pure append), O(churn) total
-            # (even if _maybe_compact just rewrote the head into a
-            # self-contained copy, the pre-compact churn dir still holds
-            # exactly the appended rows)
-            import json as _json
-
-            from pyspark.sql import types as T
-
-            st = T.StructType.fromJson(_json.loads(new_dv.schema_json))
-            inc_df = sess.spark.read.schema(st).parquet(
-                sess.metastore.version_data_path(name, new_dv.version)
-            )
-            _refresh_profile(
-                increment_df=inc_df,
-                base_version=prev_version.version,
-            )
-        elif n_deleted == 0 and _has_matching_profile(
-            sess, name, prev_version.version, profile
-        ):
-            head_df, _, head_v = sess.metastore.load_dataset(
-                sess.spark, name
-            )
+            head_df, _, head_v = sess.metastore.load_dataset(sess.spark, name)
             h = head_df.alias("h")
             p = proc_keys.alias("p")
             cond = None
-            for k, f in zip(keys, flat_keys):
+            for k, f in zip(run.keys, run.flat_keys):
                 c = F.col(f"h.{k}").eqNullSafe(F.col(f"p.{f}"))
                 cond = c if cond is None else cond & c
-            inc_df = h.join(p, cond, "left_semi").persist()
-            try:
-                kept_rows = head_v.num_rows - inc_df.count()
-                if kept_rows == prev_version.num_rows:
-                    _refresh_profile(
-                        increment_df=inc_df,
-                        base_version=prev_version.version,
-                    )
-                else:
-                    _refresh_profile()
-            finally:
-                inc_df.unpersist()
+            inc = h.join(p, cond, "left_semi").persist()
+            if head_v.num_rows - inc.count() != prev_version.num_rows:
+                inc.unpersist()
+                inc = None
+    try:
+        if inc is None:
+            _profile(run)
         else:
-            _refresh_profile()
-    _stamp_meta(sess, name, job_hash, _snapshot_source())
-    return result
+            _profile(run, increment=inc, base_version=prev_version.version)
+    finally:
+        if inc is not None:
+            inc.unpersist()
 
 
 def _has_matching_profile(
@@ -819,30 +698,58 @@ def _has_matching_profile(
     )
 
 
+def _snapshot_source(run: _Run) -> dict:
+    """Persist what the next run's diff needs, the cheapest sound way;
+    returns the pin attrs to stamp on the result head.
+
+    - dataset-version source: write nothing (the pin identifies it);
+    - raw source with explicit delta_compare: keys+compare columns only —
+      diff(added/modified) takes left-side values and the deleted probe
+      is keys-only, so the old side's payload columns are never read (a
+      full-width copy of a 100-TB source per run otherwise);
+    - raw source, compare=None: full snapshot (the diff compares every
+      common column).
+    """
+    if run.src_pin is not None:
+        return dict(run.src_pin)
+    source = run.source
+    if run.cmp_list is not None:
+        want = list(dict.fromkeys([*run.keys, *run.cmp_list]))
+        cols = set(source.df.columns)
+        if all(("." not in c) and c in cols for c in want):
+            source.select(*want).save(
+                run.snap_name, attrs={"delta_snap_cols": ",".join(want)}
+            )
+            return {}
+    source.save(run.snap_name)
+    return {}
+
+
+def _finish(run: _Run) -> None:
+    """Snapshot the source for the next run's diff, then stamp the
+    checkpoint job hash plus the source-pin attrs on the head version.
+    The pin attrs are authoritative for the run's snapshot mode: empty
+    means a ``__delta_source`` snapshot was written, so any stale pin
+    from an earlier dataset-sourced run must come OFF (the next run reads
+    the pin first)."""
+    pin_attrs = _snapshot_source(run)
+    ms = run.sess.metastore
+    rec = ms.get_record(run.name)
+    v = rec.latest_version()
+    v.job_hash = run.job_hash
+    if pin_attrs:
+        v.attrs.update(pin_attrs)
+    else:
+        for k in ("delta_source_dataset", "delta_source_version",
+                  "delta_source_uuid"):
+            v.attrs.pop(k, None)
+    ms._write_record(rec)
+
+
 def _stamp_job_hash(sess: Session, name: str, job_hash: str) -> None:
     rec = sess.metastore.get_record(name)
     v = rec.latest_version()
     v.job_hash = job_hash
-    sess.metastore._write_record(rec)
-
-
-def _stamp_meta(
-    sess: Session, name: str, job_hash: str, pin_attrs: dict
-) -> None:
-    """Stamp the checkpoint job hash plus the source-pin attrs on the
-    head version. ``pin_attrs`` is authoritative for the run's snapshot
-    mode: empty means a ``__delta_source`` snapshot was written, so any
-    stale pin from an earlier dataset-sourced run must come OFF (the
-    next run reads the pin first)."""
-    rec = sess.metastore.get_record(name)
-    v = rec.latest_version()
-    v.job_hash = job_hash
-    if pin_attrs:
-        v.attrs.update(pin_attrs)
-    else:
-        v.attrs.pop("delta_source_dataset", None)
-        v.attrs.pop("delta_source_version", None)
-        v.attrs.pop("delta_source_uuid", None)
     sess.metastore._write_record(rec)
 
 

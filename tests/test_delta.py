@@ -2,6 +2,7 @@
 tests/func/test_delta.py semantics."""
 
 import pytest
+from pydantic import BaseModel
 from pyspark.sql import functions as F
 
 import datachain_spark as dc
@@ -301,3 +302,39 @@ def test_delta_modified_rows_disable_append_mode(session, fresh_ms):
     head = session.metastore.get_record("dmm_out").latest_version()
     assert "extends_version" not in head.attrs
     assert sorted(out.to_list("id", "doubled")) == [(1, 2), (2, 198), (3, 6)]
+
+
+class _Point(BaseModel):
+    a: int
+    b: str
+
+
+def _points(session, ids, xs):
+    return dc.read_values(
+        session=session, id=ids, x=xs,
+        pt=[_Point(a=i, b=str(i)) for i in ids],
+    )
+
+
+@pytest.mark.parametrize("by_reference", [True, False])
+def test_delta_returns_signal_models(session, fresh_ms, by_reference):
+    """A model-backed column comes back as model instances from every
+    delta_save return: the full run, the by-reference write, the rewrite
+    and the converged re-run."""
+    name = f"dsm_out_{int(by_reference)}"
+    ids = list(range(10))
+    out = delta_save(_points(session, ids, ids), _double, name, delta_on="id")
+    assert isinstance(next(out.to_iter("pt"))[0], _Point)
+    xs = list(ids)
+    if by_reference:
+        xs[3] = 99  # one modified key of ten: tombstoned chain link
+    else:
+        xs = [-x for x in xs]  # every key modified: full rewrite
+    src = _points(session, ids, xs)
+    out = delta_save(src, _double, name, delta_on="id")
+    head = session.metastore.get_record(name).latest_version()
+    assert ("extends_version" in head.attrs) == by_reference
+    assert all(isinstance(p, _Point) for p, in out.to_iter("pt"))
+    assert out.signal_models == {"pt": _Point}
+    out = delta_save(src, _double, name, delta_on="id")  # converged
+    assert all(isinstance(p, BaseModel) for p, in out.to_iter("pt"))

@@ -11,7 +11,7 @@ import os
 import pytest
 
 import datachain_spark as dc
-from datachain_spark import C
+from datachain_spark import C, delta
 from datachain_spark.delta import delta_save
 
 
@@ -86,12 +86,11 @@ def test_extend_equals_rewrite(session, fresh_ms, monkeypatch):
         out = delta_save(src2, _double, name, delta_on="id")
         return sorted(out.to_list("id", "x", "doubled"))
 
-    monkeypatch.delenv("DATACHAIN_SPARK_MAX_CHAIN_DEPTH", raising=False)
     fast = run("deq_fast")
     assert "tombstone_on" in (
         session.metastore.get_record("deq_fast").latest_version().attrs
     )
-    monkeypatch.setenv("DATACHAIN_SPARK_MAX_CHAIN_DEPTH", "1")
+    monkeypatch.setattr(delta, "MAX_CHAIN_DEPTH", 1)
     slow = run("deq_slow")
     assert "extends_version" not in (
         session.metastore.get_record("deq_slow").latest_version().attrs
@@ -127,9 +126,9 @@ def test_extend_readd_after_delete(session, fresh_ms):
 
 def test_chain_depth_capped(session, fresh_ms, monkeypatch):
     """A long incremental series must never build a chain deeper than
-    $DATACHAIN_SPARK_MAX_CHAIN_DEPTH — the capped run does one full save
-    and the chain restarts from the self-contained copy."""
-    monkeypatch.setenv("DATACHAIN_SPARK_MAX_CHAIN_DEPTH", "3")
+    delta.MAX_CHAIN_DEPTH — the capped run does one full save and the
+    chain restarts from the self-contained copy."""
+    monkeypatch.setattr(delta, "MAX_CHAIN_DEPTH", 3)
     ms = session.metastore
     max_depth_seen = 0
     for n in range(2, 9):
@@ -288,3 +287,31 @@ def test_dangling_extends_names_the_chain(session, fresh_ms):
 
     with pytest.raises(DatasetVersionNotFoundError, match="chain is broken"):
         session.metastore.load_dataset(session.spark, "ddg_out")
+
+
+def test_tombstoned_chain_load_launches_no_jobs(session, fresh_ms):
+    """Loading a chain with three tombstoned links reads every tombstone
+    dir with the schema recorded on the version — no schema-inference
+    job per link."""
+    ids = list(range(20))
+    xs = [i * 10 for i in ids]
+    src = dc.read_values(session=session, id=ids, x=xs)
+    delta_save(src, _double, "dtj_out", delta_on="id")
+    for k in (3, 7, 11):  # one modified key per run -> one tombstoned link
+        xs[k] = -xs[k]
+        src = dc.read_values(session=session, id=ids, x=list(xs))
+        delta_save(src, _double, "dtj_out", delta_on="id")
+    ms = session.metastore
+    rec = ms.get_record("dtj_out")
+    links = ms._chain_versions(rec, rec.latest_version())
+    assert sum("tombstone_on" in v.attrs for v in links) == 3
+    sc = session.spark.sparkContext
+    sc.setJobGroup("dtj_load", "tombstoned chain load")
+    try:
+        df, _, _ = ms.load_dataset(session.spark, "dtj_out")
+        jobs = sc.statusTracker().getJobIdsForGroup("dtj_load")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 0, f"chain load launched {len(jobs)} jobs"
+    got = dict((r["id"], r["doubled"]) for r in df.collect())
+    assert got == {i: 2 * x for i, x in zip(ids, xs)}

@@ -955,6 +955,60 @@ def test_delta_profile_append_run_job_budget(session, sf_dir, fresh_ms):
     assert 0 < len(jobs) <= 24, f"append run used {len(jobs)} jobs"
 
 
+def test_delta_retry_by_reference_profile_increment(
+    session, sf_dir, fresh_ms
+):
+    """delta_retry=True on the by-reference path: keys the previous run
+    left out of the result come back as churn. Nothing is displaced, so
+    the profile merges the churn increment — and the merged profile must
+    equal a full re-profile of the new head."""
+    import unittest.mock as mock
+
+    from datachain_spark.ops import release as release_mod
+    from datachain_spark.ops.sketches import profile_sketch
+
+    calls = []
+    real = release_mod.profile_version
+
+    def spy(name, *a, **kw):
+        calls.append(kw.get("increment") is not None)
+        return real(name, *a, **kw)
+
+    orders = dc.read_parquet(f"{sf_dir}/orders.parquet", session=session)
+    key = dc.C("o_orderkey")
+    cfg = dict(group_cols="o_orderpriority", value_col="o_totalprice",
+               lo=0.0, hi=600000.0, bins=32)
+    with mock.patch.object(release_mod, "profile_version", side_effect=spy):
+        # run 1 leaves every 11th key out of the result
+        delta_save(orders.filter(key % 3 != 0),
+                   lambda ch: ch.filter(dc.C("o_orderkey") % 11 != 0),
+                   "dretry", "o_orderkey", delta_compare="o_orderkey",
+                   delta_retry=True, profile=cfg)
+        # run 2 adds a few keys and retries the missing ones
+        src2 = orders.filter((key % 3 != 0) | (key < 200))
+        out = delta_save(src2, lambda ch: ch, "dretry", "o_orderkey",
+                         delta_compare="o_orderkey", delta_retry=True,
+                         profile=cfg)
+    head = fresh_ms.get_record("dretry").latest_version()
+    assert "tombstone_on" in head.attrs  # by reference, retry tombstones
+    assert calls == [False, True]  # full profile, then the increment
+    assert out.count() == src2.count()
+
+    def _rows(df):
+        return {
+            r["o_orderpriority"]:
+            (r["n_rows"], r["n_value"], round(r["sum_x"], 6),
+             r["min_x"], r["max_x"], tuple(r["hist"]))
+            for r in df.collect()
+        }
+
+    stored, _, _ = fresh_ms.load_dataset(session.spark, "dretry__profile")
+    full = profile_sketch(out.df, ["o_orderpriority"],
+                          value_col="o_totalprice", lo=0.0, hi=600000.0,
+                          bins=32)
+    assert _rows(stored) == _rows(full)
+
+
 def test_flag_api_rejects_delta_result_on(session, sf_dir, fresh_ms):
     with pytest.raises(NotImplementedError, match="delta_result_on"):
         dc.read_parquet(

@@ -286,3 +286,28 @@ def test_listing_to_multimodal_pipeline(session, tmp_path):
         for r in again.select(again["file.path"].alias("p"), "image").collect()
     }
     assert rows2 == rows
+
+
+def test_gen_agg_dotted_scalar_params_over_storage(session, tree):
+    """gen/agg with dotted scalar params (``file.path``) narrow the File
+    struct to just those fields; the narrowed frame must survive the
+    Python boundary, which re-selects every input column by name."""
+    ch = dc.read_storage(tree, session=session, update=True).map(
+        ext=lambda path: path.rsplit(".", 1)[-1], params=["file.path"],
+        output=str,
+    )
+
+    def split(path, size, ext):
+        yield path.rsplit("/", 1)[-1], size, ext
+
+    out = ch.gen(split, params=["file.path", "file.size", "ext"],
+                 output={"base": str, "size": int, "ext": str})
+    got = sorted(out.to_list("base", "size", "ext"))
+    assert ("notes.txt", 11, "txt") in got and len(got) == 6
+
+    def total(path, size):
+        yield len(path), sum(size)
+
+    agg = ch.agg(total, params=["file.path", "file.size"],
+                 output={"n": int, "bytes": int})
+    assert agg.to_list() == [(6, sum(s for s, in ch.to_list("file.size")))]
